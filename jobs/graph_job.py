@@ -65,7 +65,9 @@ def main() -> None:
         raise SystemExit("--prior-edges only applies to cc with --init-scores")
     if args.iters is None:
         args.iters = {"kcore": 30, "walks": 10}.get(args.algo, 20)
-    if args.checkpoint_dir and args.algo in ("wpagerank", "ppr", "walks"):
+    if args.checkpoint_dir and args.algo in (
+        "wpagerank", "ppr", "walks", "cc-two-phase"
+    ):
         import sys as _sys
 
         print(f"WARNING: --checkpoint-dir is not supported by {args.algo}; "
@@ -114,7 +116,6 @@ def main() -> None:
                                        prior_edges=prior_edges)
         elif args.algo == "cc-two-phase":
             res = connected_components(edges, algorithm="two-phase",
-                                       checkpoint_dir=args.checkpoint_dir,
                                        max_iter=args.iters)
         elif args.algo == "hits":
             res = hits(edges, max_iter=args.iters, tol=args.tol,

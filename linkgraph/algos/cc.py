@@ -30,9 +30,6 @@ def _undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-BROADCAST_STATE_MAX_VERTICES = 20_000_000
-
-
 def connected_components(
     edges: DataFrame,
     *,
@@ -89,8 +86,7 @@ def connected_components(
     """
     if algorithm == "two-phase":
         return _star_contraction(
-            edges, vertices=vertices, max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir, job_id=job_id,
+            edges, vertices=vertices, max_iter=max_iter, job_id=job_id
         )
     spark = edges.sparkSession
     if num_partitions is None:
@@ -137,7 +133,7 @@ def connected_components(
     # uncached for verts, once for the loop cache — paying an extra
     # 2|E|-row pass before the first superstep. The cache is built
     # optimistically partitioned by dst (the broadcast plan, which
-    # covers everything up to BROADCAST_STATE_MAX_VERTICES); when the
+    # covers everything up to pregel.BROADCAST_STATE_MAX_VERTICES); when the
     # vertex count lands above that, the src-keyed cache the exchange
     # plan wants is RESHUFFLED FROM the dst cache (one cache-to-cache
     # exchange) rather than rebuilt from the raw edges — setup-only
@@ -151,7 +147,7 @@ def connected_components(
     verts = verts.persist()
     n = verts.count()
     if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_VERTICES
+        broadcast_state = n <= pregel.BROADCAST_STATE_MAX_VERTICES
     if not broadcast_state and part_key == "dst":
         # auto-detected huge graph: re-key the existing cache to src
         resrc = und.repartition(num_partitions, "src").persist()
@@ -212,9 +208,9 @@ def connected_components(
         return new.observe(obs, F.sum(F.col("_ch").cast("long")).alias("changed"))
 
     def delta(old: DataFrame, new: DataFrame) -> float:
-        # equivalent to changed_count(old, new): least() only decreases,
-        # so new != old  ⟺  mmin < old.component  ⟺  _ch. The metric was
-        # collected during the superstep's own materialization.
+        # the number of vertices whose component changed: least() only
+        # decreases, so new != old  ⟺  mmin < old.component  ⟺  _ch. The
+        # metric was collected during the superstep's own materialization.
         obs = pending_obs.pop()
         return float(obs.get["changed"] or 0)
 
@@ -243,16 +239,15 @@ def _star_contraction(
     *,
     vertices: DataFrame | None,
     max_iter: int,
-    checkpoint_dir: str | None,
     job_id: str,
 ) -> pregel.PregelResult:
     """Alternating large-star / small-star until the edge set is stable.
 
-    State here is the evolving parent-pointer edge set; converges in
+    State here is the evolving parent-pointer edge set, one large-star +
+    small-star round per ``pregel.run_pregel`` superstep; converges in
     O(log² n) rounds, robust to long path graphs where hash-min needs
-    O(diameter) rounds.
+    O(diameter) rounds. Not checkpointed.
     """
-    spark = edges.sparkSession
     e = (
         _undirected(edges)
         .where(F.col("src") != F.col("dst"))
@@ -260,15 +255,9 @@ def _star_contraction(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    metrics: list[dict] = []
-    import time
 
-    it = 0
-    converged = False
-    while it < max_iter:
-        t0 = time.monotonic()
+    def superstep(_edges: DataFrame, e: DataFrame, i: int) -> DataFrame:
         # large-star: every neighbor larger than u links to u's min neighbor
         nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = nbrs.groupBy("u").agg(F.min("v").alias("m"))
@@ -285,40 +274,31 @@ def _star_contraction(
             large.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).where(F.col("v") < F.col("u"))
         mins2 = nbrs2.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             nbrs2.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionAll(mins2.select(F.col("u"), F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        changed = small.exceptAll(e).count() + e.exceptAll(small).count()
-        it += 1
-        metrics.append(
-            {"job_id": job_id, "superstep": it, "wall_s": round(time.monotonic() - t0, 4), "delta": float(changed)}
-        )
-        e = small
-        if changed == 0:
-            # explicit flag: a run whose edge set stabilises exactly on the
-            # final allowed round is still converged (it == max_iter here)
-            converged = True
-            break
 
-    # e is now a forest pointing each vertex at its component min.
+    def changed(old: DataFrame, new: DataFrame) -> float:
+        return float(new.exceptAll(old).count() + old.exceptAll(new).count())
+
+    res = pregel.run_pregel(
+        edges, e, superstep, changed, max_iter=max_iter, tol=0.0, job_id=job_id
+    )
+    # the state is now a forest pointing each vertex at its component min.
+    forest = res.state
     if vertices is None:
         verts = (
             _undirected(edges).select(F.col("src").alias("vid")).distinct()
         )
     else:
         verts = vertices.select("vid")
-    comp = verts.join(e, verts["vid"] == e["u"], "left").select(
+    comp = verts.join(forest, verts["vid"] == forest["u"], "left").select(
         "vid", F.coalesce(F.col("v"), F.col("vid")).alias("component")
     )
-    return pregel.PregelResult(
-        state=comp.localCheckpoint(eager=True),
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-    )
+    res.state = comp.localCheckpoint(eager=True)
+    return res

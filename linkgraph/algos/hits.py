@@ -31,10 +31,12 @@ right (E-row exchange per iteration dwarfs one extra cached copy that
 can spill to disk).
 
 The loop is hand-rolled rather than pregel.run_pregel because one HITS
-superstep is TWO half-steps with a mid-superstep scalar collect and a
-two-column delta; durable checkpoint/resume comes from reusing
+superstep is TWO half-steps, each materialized before its norm
+aggregate — run_pregel's own per-superstep localCheckpoint would be a
+third materialization. Durable checkpoint/resume comes from reusing
 pregel.CheckpointStore directly (commit-markered state + metrics rows,
-final state always saved).
+final state always saved), with run_pregel's input-fingerprint check:
+checkpoints written for a different edge set are cleared, not resumed.
 """
 
 from __future__ import annotations
@@ -45,7 +47,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
 
 
 def hits(
@@ -79,9 +80,16 @@ def hits(
         pregel.CheckpointStore(checkpoint_dir, job_id) if checkpoint_dir else None
     )
     e0 = edges.select("src", "dst").distinct()
+    # broadcast plan: one dst-partitioned cache serves both half-steps
+    # (the state side is broadcast, the auth groupBy(dst) is exchange-
+    # free). Exchange plan: one cache per join orientation so neither
+    # half-step ever exchanges E rows (see module docstring).
+    e_dst = e0.repartition(num_partitions, "dst").persist()
     metrics: list[dict] = []
     it = 0
     state = None
+    if store is not None:
+        store.check_input(e_dst, resume=resume)
     if store is not None and resume:
         last = store.latest()
         if last is not None:
@@ -112,12 +120,7 @@ def hits(
             ).localCheckpoint(eager=True)
     if broadcast_state is None:
         # state is localCheckpoint-materialized: this count is a cheap scan
-        broadcast_state = state.count() <= BROADCAST_STATE_MAX_VERTICES
-    # broadcast plan: one dst-partitioned cache serves both half-steps
-    # (the state side is broadcast, the auth groupBy(dst) is exchange-
-    # free). Exchange plan: one cache per join orientation so neither
-    # half-step ever exchanges E rows (see module docstring).
-    e_dst = e0.repartition(num_partitions, "dst").persist()
+        broadcast_state = state.count() <= pregel.BROADCAST_STATE_MAX_VERTICES
     e_src = e_dst if broadcast_state else e0.repartition(
         num_partitions, "src"
     ).persist()
@@ -202,7 +205,7 @@ def hits(
                 "job_id": job_id,
                 "superstep": it,
                 "wall_s": round(time.monotonic() - t0, 4),
-                "delta": float(delta) if delta is not None else float("nan"),
+                "delta": delta,
             }
         )
         state = new_state

@@ -12,8 +12,6 @@ pairs; nothing wider ever shuffles, and the edge set only shrinks.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,87 +31,58 @@ def k_core(
 ) -> pregel.PregelResult:
     """Returns state = (vid) rows of the k-core's surviving vertices.
 
-    ``checkpoint_dir`` enables durable per-round checkpoints of the
-    shrinking edge set (commit-markered, CheckpointStore layout); a
-    killed run resumes from the last committed round — peeling is
-    idempotent, so a resumed run is bit-identical to an uninterrupted
-    one."""
+    A peel round is one ``pregel.run_pregel`` superstep whose state is
+    the shrinking undirected edge set; its delta is the number of edges
+    the round removed, so the run converges on the first round that
+    removes none. ``checkpoint_dir`` enables run_pregel's durable
+    checkpoints of that edge set (commit-markered, input-fingerprint
+    checked); a killed run resumes from the last committed round —
+    peeling is idempotent, so a resumed run is bit-identical to an
+    uninterrupted one."""
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    store = (
-        pregel.CheckpointStore(checkpoint_dir, job_id or f"kcore{k}")
-        if checkpoint_dir
-        else None
+    e = edges.select("src", "dst")
+    und = (
+        e.where(F.col("src") != F.col("dst"))
+        .unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .repartition(num_partitions, "src")
     )
-    metrics: list[dict] = []
-    it = 0
-    und = None
-    if store is not None and resume:
-        last = store.latest()
-        if last is not None:
-            loaded, metrics = store.load(spark, last)
-            und = loaded.repartition(num_partitions, "src").localCheckpoint(
-                eager=True
-            )
-            it = last
-    if und is None:
-        und = (
-            edges.select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .unionAll(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .repartition(num_partitions, "src")
-            .localCheckpoint(eager=True)
-        )
-    converged = False
-    saved = False  # final-state durability check after the loop
-    n_edges = und.count()  # carried forward; equals last round's pruned count
-    while it < max_iter:
-        t0 = time.monotonic()
+
+    def peel(_edges: DataFrame, und: DataFrame, i: int) -> DataFrame:
         alive = (
             und.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .where(F.col("deg") >= k)
             .select(F.col("src").alias("vid"))
         )
-        pruned = (
-            und.join(alive, und["src"] == alive["vid"], "left_semi")
-            .join(
-                alive.select(F.col("vid").alias("__d__")),
-                und["dst"] == F.col("__d__"),
-                "left_semi",
-            )
-            .localCheckpoint(eager=True)
+        return und.join(alive, und["src"] == alive["vid"], "left_semi").join(
+            alive.select(F.col("vid").alias("__d__")),
+            und["dst"] == F.col("__d__"),
+            "left_semi",
         )
-        n_pruned = pruned.count()
-        removed = n_edges - n_pruned
-        n_edges = n_pruned
-        it += 1
-        metrics.append(
-            {
-                "job_id": f"kcore{k}",
-                "superstep": it,
-                "wall_s": round(time.monotonic() - t0, 4),
-                "delta": float(removed),
-            }
-        )
-        und = pruned
-        saved = False
-        if store is not None and (it % checkpoint_every == 0 or removed == 0):
-            store.save(it, und, metrics)
-            saved = True
-        if removed == 0:
-            converged = True
-            break
-    if store is not None and it > 0 and not saved:
-        store.save(it, und, metrics)  # final round always durable
-    core = und.select(F.col("src").alias("vid")).distinct()
-    return pregel.PregelResult(
-        state=core.localCheckpoint(eager=True),
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
+
+    sizes: list[int] = []  # edge count after each round, carried forward
+
+    def removed(old: DataFrame, new: DataFrame) -> float:
+        if not sizes:
+            sizes.append(old.count())
+        sizes.append(new.count())
+        return float(sizes[-2] - sizes[-1])
+
+    res = pregel.run_pregel(
+        e,
+        und,
+        peel,
+        removed,
+        max_iter=max_iter,
+        tol=0.0,
+        checkpoint_dir=checkpoint_dir,
+        job_id=job_id or f"kcore{k}",
+        checkpoint_every=checkpoint_every,
+        resume=resume,
     )
+    core = res.state.select(F.col("src").alias("vid")).distinct()
+    res.state = core.localCheckpoint(eager=True)
+    return res

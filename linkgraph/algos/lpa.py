@@ -62,7 +62,7 @@ def label_propagation(
     else:
         verts = vertices.select("vid")
     verts = verts.persist()
-    broadcast_state = verts.count() <= 20_000_000
+    broadcast_state = verts.count() <= pregel.BROADCAST_STATE_MAX_VERTICES
     init = verts.select("vid", F.col("vid").alias("label"))
 
     # changed-count collected as an observed metric of the superstep
@@ -94,8 +94,8 @@ def label_propagation(
         return new.observe(obs, F.sum(F.col("_ch").cast("long")).alias("changed"))
 
     def delta(old: DataFrame, new: DataFrame) -> float:
-        # equivalent to changed_count(old, new): label changed ⟺ the
-        # adopted newlabel was non-null and differed (null ⇒ excluded
+        # the number of vertices whose label changed: label changed ⟺
+        # the adopted newlabel was non-null and differed (null ⇒ excluded
         # from the sum). Collected during the superstep's own
         # materialization — no extra job.
         obs = pending_obs.pop()

@@ -1,5 +1,5 @@
 """Weighted PageRank over (src, dst, weight) edges — the host-graph
-companion of algos/pagerank.py.
+companion of algos/pagerank.py, run by the same rank kernel.
 
 Transitions are weight-proportional: a walker at u moves to v with
 probability w(u,v)/W(u), W(u) = Σ w(u,·); dangling (W=0 or no
@@ -7,22 +7,19 @@ out-edges) mass redistributes uniformly, damping as usual. The natural
 input is ``normalize.host_graph`` output (weight = page-level link
 count), where uniform transitions would badly misrank mega-sites.
 
-Kept separate from the unweighted kernel on purpose: pagerank.py is the
-frozen north-rule path (golden fixtures + scaling evidence); this
-shares its plan shape — edges cached with precomputed contribution
-fraction, broadcast-probe + partial/final aggregate per superstep, state
-carries (vid, score), one scalar action per iteration.
+The transition fraction is folded into the edge frame the kernel caches
+(src, dst, frac), and the state's ``out_degree`` is the 1.0/0.0
+has-out-weight indicator, so the kernel's message ``score / out_degree *
+frac`` is exactly ``score * frac``.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph import pregel
-from linkgraph.algos.pagerank import BROADCAST_STATE_MAX_VERTICES
+from linkgraph.algos.pagerank import _rank
 
 
 def weighted_pagerank(
@@ -49,12 +46,6 @@ def weighted_pagerank(
     Vertices whose total out-weight is <= 0 (or null) are treated as
     dangling — their edges carry no mass and never divide by zero.
     """
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    # fold the transition fraction INTO the cached edge frame once:
-    # frac(u, v) = w(u,v) / W(u) — per-superstep work is then a plain
-    # multiply, no per-iteration weight normalization join
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -63,12 +54,12 @@ def weighted_pagerank(
     # one-pass setup (r6, as in pagerank.py): per-vid total out-weight
     # in a single aggregation over the unioned endpoints — src rows
     # carry their weight, dst rows a NULL (contributes nothing to the
-    # sum). No union+distinct pass, no join. CRITICAL: has_out and the
-    # normalization total `tot` both derive from THIS one cached
-    # aggregate — computing them as two independent float sums could
-    # disagree at the `> 0` boundary on mixed-sign weights (different
-    # summation orders), classifying a vertex active while giving it no
-    # frac rows, silently losing rank mass.
+    # sum). No union+distinct pass, no join. CRITICAL: the dangling
+    # indicator and the normalization total `tot` both derive from THIS
+    # one cached aggregate — computing them as two independent float
+    # sums could disagree at the `> 0` boundary on mixed-sign weights
+    # (different summation orders), classifying a vertex active while
+    # giving it no frac rows, silently losing rank mass.
     endpoints = e.select(F.col("src").alias("vid"), F.col("w")).unionAll(
         e.select(F.col("dst").alias("vid"), F.lit(None).cast("double").alias("w"))
     )
@@ -76,124 +67,27 @@ def weighted_pagerank(
     tot = wsum.where(F.col("__W__") > 0).select(
         F.col("vid").alias("src"), "__W__"
     )  # zero/null out-weight == dangling
-    base_state = (
-        wsum.select(
-            "vid",
-            F.when(F.col("__W__") > 0, 1.0).otherwise(0.0).alias("has_out"),
+    base_state = wsum.select(
+        "vid", F.when(F.col("__W__") > 0, 1.0).otherwise(0.0).alias("out_degree")
+    ).persist()
+    # frac(u, v) = w(u,v) / W(u): per-superstep work is then a plain
+    # multiply, no per-iteration weight normalization join
+    frac = e.join(tot, "src").select(
+        "src", "dst", (F.col("w") / F.col("__W__")).alias("frac")
+    )
+    try:
+        return _rank(
+            frac,
+            base_state,
+            base_state.count(),
+            seeds=None,
+            damping=damping,
+            tol=tol,
+            max_iter=max_iter,
+            broadcast_state=broadcast_state,
+            num_partitions=num_partitions,
+            job_id="wpagerank",
+            init_scores=init_scores,
         )
-        .repartition(num_partitions, "vid")
-        .persist()
-    )
-    n = base_state.count()
-    if broadcast_state is None:
-        broadcast_state = n <= BROADCAST_STATE_MAX_VERTICES
-    # plan switch as in pagerank.py: broadcast plan caches the fraction
-    # frame by dst (exchange-free message agg after the broadcast probe);
-    # exchange plan caches by src so the state join is co-partitioned and
-    # only the V-row state + partial sums shuffle per superstep.
-    part_key = "dst" if broadcast_state else "src"
-    frac = (
-        e.join(tot, "src")
-        .select("src", "dst", (F.col("w") / F.col("__W__")).alias("frac"))
-        .repartition(num_partitions, part_key)
-        .persist()
-    )
-    if n == 0:
-        from pyspark.sql import types as T
-
-        frac.unpersist()
+    finally:
         wsum.unpersist()
-        base_state.unpersist()
-        empty = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("vid", e.schema["src"].dataType),
-                    T.StructField("score", T.DoubleType()),
-                ]
-            ),
-        )
-        return pregel.PregelResult(state=empty, iterations=0, converged=True, metrics=[])
-    if init_scores is not None:
-        prior = init_scores.select("vid", F.col("score").alias("_prior"))
-        seeded = base_state.join(prior, "vid", "left").select(
-            "vid",
-            F.coalesce("_prior", F.lit(1.0 / n)).alias("score"),
-            "has_out",
-        )
-        total = seeded.agg(F.sum("score")).collect()[0][0]
-        if total and total > 0:
-            state = seeded.select(
-                "vid",
-                (F.col("score") / F.lit(float(total))).alias("score"),
-                "has_out",
-            ).localCheckpoint(eager=True)
-        else:  # empty/zero prior: fall back to the uniform init (as ppr does)
-            state = base_state.select(
-                "vid", F.lit(1.0 / n).alias("score"), "has_out"
-            ).localCheckpoint(eager=True)
-    else:
-        state = base_state.select(
-            "vid", F.lit(1.0 / n).alias("score"), "has_out"
-        ).localCheckpoint(eager=True)
-
-    metrics: list[dict] = []
-    it = 0
-    converged = False
-    while it < max_iter:
-        t0 = time.monotonic()
-        # dangling mass rides the plan as a broadcast 1-row frame (r6;
-        # same trick as pagerank.py) — one action per iteration
-        dangling = F.broadcast(
-            state.where(F.col("has_out") == 0.0).agg(
-                F.coalesce(F.sum("score"), F.lit(0.0)).alias("_dangling")
-            )
-        )
-        active = state.where(F.col("has_out") > 0.0).select("vid", "score")
-        if broadcast_state:
-            active = F.broadcast(active)
-        sums = (
-            frac.join(active, frac["src"] == active["vid"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("score") * F.col("frac")).alias("msum"))
-        )
-        base = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping) * F.col("_dangling") / F.lit(float(n))
-        )
-        new_state = state.hint("merge").join(
-            sums, state["vid"] == sums["dst"], "left"
-        ).crossJoin(dangling).select(
-            "vid",
-            (base + F.lit(damping) * F.coalesce("msum", F.lit(0.0))).alias("score"),
-            "has_out",
-        ).localCheckpoint(eager=True)
-        it += 1
-        delta = (
-            pregel.linf_delta(state, new_state, "vid", "score")
-            if tol is not None
-            else None
-        )
-        metrics.append(
-            {
-                "job_id": "wpagerank",
-                "superstep": it,
-                "wall_s": round(time.monotonic() - t0, 4),
-                "delta": float(delta) if delta is not None else float("nan"),
-            }
-        )
-        state = new_state
-        if tol is not None and delta is not None and delta <= tol:
-            converged = True
-            break
-    frac.unpersist()
-    wsum.unpersist()
-    base_state.unpersist()
-    # fixed-iteration mode (tol=None) reports converged=False, matching
-    # run_pregel's semantics so graph_job JSON lines are comparable
-    return pregel.PregelResult(
-        state=state.select("vid", "score"),
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-    )

@@ -33,6 +33,7 @@ import json
 import os
 import shutil
 import time
+import warnings
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -41,6 +42,10 @@ from pyspark.sql import functions as F
 
 SuperstepFn = Callable[[DataFrame, DataFrame, int], DataFrame]
 DeltaFn = Callable[[DataFrame, DataFrame], float]
+
+# Above this vertex count a kernel's state is no longer broadcast
+# (driver/executor memory bound) and the kernel uses the exchange plan.
+BROADCAST_STATE_MAX_VERTICES = 20_000_000
 
 
 @dataclass
@@ -61,6 +66,7 @@ class CheckpointStore:
     """
 
     def __init__(self, root: str, job_id: str):
+        self.job_id = job_id
         self.dir = os.path.join(root, job_id)
         os.makedirs(self.dir, exist_ok=True)
 
@@ -79,6 +85,48 @@ class CheckpointStore:
     def write_fingerprint(self, fp: str) -> None:
         with open(os.path.join(self.dir, self._FP_FILE), "w") as f:
             json.dump({"fingerprint": fp}, f)
+
+    def check_input(self, edges: DataFrame, *, resume: bool) -> None:
+        """Bind this job_id to the input ``edges``; clear checkpoints made
+        from any other input (warning if a resume would have used them).
+
+        Input fingerprint: order-insensitive (count, bit_xor of row
+        hashes, sum of row hashes) over the edge frame — one cheap
+        columnar agg per RUN (callers pass a cached frame where they have
+        one). A checkpoint under this job_id that was produced from a
+        DIFFERENT edge set must not be resumed: its state is for another
+        graph, and `latest()` could even out-step the fresh run and
+        shadow it on a later resume — so a mismatch clears the stale
+        checkpoints before starting. The decimal SUM keeps the
+        fingerprint multiplicity-aware (bit_xor alone cancels duplicated
+        rows: multisets {a,a,b} and {c,c,b} share count and xor), and a
+        checkpoint directory with NO stored fingerprint but existing
+        checkpoints (written pre-fingerprinting, or a crash between
+        clear() and write_fingerprint) is treated as a mismatch too — it
+        cannot be validated after the fact. A format upgrade (e.g. the r6
+        two-field -> three-field change) also mismatches and clears:
+        deliberately safe-by-default — old checkpoints would only be
+        resumable under the weaker validation the upgrade exists to
+        replace.
+        """
+        fp_row = edges.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*edges.columns)).alias("x"),
+            F.sum(F.xxhash64(*edges.columns).cast("decimal(38,0)")).alias("s"),
+        ).collect()[0]
+        fingerprint = f"{fp_row['n']}:{fp_row['x']}:{fp_row['s']}"
+        stored = self.read_fingerprint()
+        if stored != fingerprint and (
+            stored is not None or self.latest() is not None
+        ):
+            if resume and self.latest() is not None:
+                warnings.warn(
+                    f"checkpoints under job_id={self.job_id!r} were produced "
+                    "from a different edge set (or one whose fingerprint "
+                    "is missing); ignoring and clearing them"
+                )
+            self.clear()
+        self.write_fingerprint(fingerprint)
 
     def clear(self) -> None:
         """Drop every checkpoint under this job_id (stale-input reset)."""
@@ -160,19 +208,6 @@ def linf_delta(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
     return float(row["d"]) if row["d"] is not None else 0.0
 
 
-def changed_count(old: DataFrame, new: DataFrame, key: str, value: str) -> float:
-    """Number of vertices whose value changed — the generic (join-based)
-    convergence delta. cc.py/lpa.py no longer use it on their hot paths
-    (they collect an equivalent flag-sum as an observed metric of the
-    superstep plan — zero extra jobs); kept as the documented fallback
-    for algorithms whose "changed" predicate cannot be computed inside
-    the superstep itself."""
-    j = new.alias("n").join(old.alias("o"), key)
-    return float(
-        j.where(F.col(f"n.{value}") != F.col(f"o.{value}")).count()
-    )
-
-
 def run_pregel(
     edges: DataFrame,
     init_state: DataFrame,
@@ -210,44 +245,7 @@ def run_pregel(
 
     state = init_state
     if store:
-        # input fingerprint: order-insensitive (count, bit_xor of row
-        # hashes, sum of row hashes) over the edge frame — one cheap
-        # columnar agg per RUN (the frame is cached by every caller). A
-        # checkpoint under this job_id that was produced from a
-        # DIFFERENT edge set must not be resumed: its state is for
-        # another graph, and `latest()` could even out-step the fresh
-        # run and shadow it on a later resume — so a mismatch clears the
-        # stale checkpoints before starting. The decimal SUM keeps the
-        # fingerprint multiplicity-aware (bit_xor alone cancels
-        # duplicated rows: multisets {a,a,b} and {c,c,b} share count and
-        # xor), and a checkpoint directory with NO stored fingerprint
-        # but existing checkpoints (written pre-fingerprinting, or a
-        # crash between clear() and write_fingerprint) is treated as a
-        # mismatch too — it cannot be validated after the fact. A
-        # format upgrade (e.g. the r6 two-field -> three-field change)
-        # also mismatches and clears: deliberately safe-by-default —
-        # old checkpoints would only be resumable under the weaker
-        # validation the upgrade exists to replace.
-        fp_row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*edges.columns)).alias("x"),
-            F.sum(F.xxhash64(*edges.columns).cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        fingerprint = f"{fp_row['n']}:{fp_row['x']}:{fp_row['s']}"
-        stored = store.read_fingerprint()
-        if stored != fingerprint and (
-            stored is not None or store.latest() is not None
-        ):
-            if resume and store.latest() is not None:
-                import warnings
-
-                warnings.warn(
-                    f"checkpoints under job_id={job_id!r} were produced "
-                    "from a different edge set (or one whose fingerprint "
-                    "is missing); ignoring and clearing them"
-                )
-            store.clear()
-        store.write_fingerprint(fingerprint)
+        store.check_input(edges, resume=resume)
     if store and resume:
         last = store.latest()
         if last is not None:

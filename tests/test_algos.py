@@ -253,6 +253,102 @@ def test_weighted_pagerank_edge_cases(spark):
     assert res2.converged is False
 
 
+def test_rank_kernels_empty_graph(spark):
+    """An empty edge frame gives an empty result typed from the edge
+    ``src`` column, after zero supersteps, for every rank wrapper."""
+    from pyspark.sql import types as T
+
+    from linkgraph.algos import personalized_pagerank
+    from linkgraph.algos.wpagerank import weighted_pagerank
+
+    empty = spark.createDataFrame([], "src bigint, dst bigint")
+    wempty = spark.createDataFrame([], "src bigint, dst bigint, weight double")
+    hempty = spark.createDataFrame(
+        [], "src_host string, dst_host string, weight bigint"
+    )
+    for res, vid_type in (
+        (pagerank(empty), T.LongType()),
+        (personalized_pagerank(empty, [0]), T.LongType()),
+        (weighted_pagerank(wempty, max_iter=2), T.LongType()),
+        (
+            weighted_pagerank(hempty, src_col="src_host", dst_col="dst_host"),
+            T.StringType(),
+        ),
+    ):
+        assert res.iterations == 0
+        assert res.state.count() == 0
+        assert res.state.columns == ["vid", "score"]
+        assert res.state.schema["vid"].dataType == vid_type
+
+
+def test_personalized_pagerank_absent_seed_raises(tiny_edges):
+    from linkgraph.algos import personalized_pagerank
+
+    with pytest.raises(ValueError, match="not present"):
+        personalized_pagerank(tiny_edges, [0, 10**9], max_iter=2)
+    with pytest.raises(ValueError, match="at least one seed"):
+        personalized_pagerank(tiny_edges, [], max_iter=2)
+
+
+def test_weighted_pagerank_string_vids_and_zero_sum_weights(spark):
+    import numpy as np
+
+    from linkgraph.algos.wpagerank import weighted_pagerank
+
+    # string host vids: a -> b (3 links), a -> c (1), b -> a, c dangling
+    hg = spark.createDataFrame(
+        [("a", "b", 3), ("a", "c", 1), ("b", "a", 2)],
+        "src_host string, dst_host string, weight bigint",
+    )
+    res = weighted_pagerank(hg, src_col="src_host", dst_col="dst_host", max_iter=30)
+    got = {r["vid"]: r["score"] for r in res.state.collect()}
+    assert set(got) == {"a", "b", "c"}
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    assert got["b"] > got["c"]
+
+    # mixed-sign weights summing to exactly 0 make vertex 0 dangling:
+    # its edges carry no mass and its score teleports uniformly
+    e = spark.createDataFrame(
+        [(0, 1, 0.5), (0, 2, 0.25), (0, 3, -0.75), (1, 0, 2.0), (2, 1, 1.0),
+         (3, 2, -1.0), (3, 0, 3.0)],
+        "src bigint, dst bigint, weight double",
+    )
+    res2 = weighted_pagerank(e, max_iter=6)
+    got2 = {r["vid"]: r["score"] for r in res2.state.collect()}
+    assert abs(sum(got2.values()) - 1.0) < 1e-9
+
+    # numpy oracle: W(0) = 0 and W(3) = 2 > 0 (frac -0.5 / 1.5 kept)
+    n, d = 4, 0.85
+    P = np.zeros((n, n))
+    P[1, 0], P[2, 1], P[3, 2], P[3, 0] = 1.0, 1.0, -0.5, 1.5
+    s = np.full(n, 1.0 / n)
+    for _ in range(6):
+        s = (1 - d) / n + d * (P.T @ s + s[0] / n)
+    for v in range(n):
+        assert abs(got2[v] - s[v]) < 1e-12
+
+
+def test_rank_fixed_iteration_metrics(tiny_edges, spark):
+    """Fixed-iteration runs (tol=None) report one metrics row per
+    superstep 1..k with ``delta is None`` — run_pregel's convention, now
+    shared by ppr, weighted PageRank and hits."""
+    from pyspark.sql import functions as F
+
+    from linkgraph.algos import personalized_pagerank
+    from linkgraph.algos.hits import hits
+    from linkgraph.algos.wpagerank import weighted_pagerank
+
+    we = tiny_edges.withColumn("weight", F.lit(1.0))
+    for res in (
+        personalized_pagerank(tiny_edges, [0], tol=None, max_iter=3),
+        weighted_pagerank(we, tol=None, max_iter=3),
+        hits(tiny_edges, tol=None, max_iter=3),
+    ):
+        assert res.iterations == 3 and res.converged is False
+        assert [m["superstep"] for m in res.metrics] == [1, 2, 3]
+        assert all(m["delta"] is None for m in res.metrics)
+
+
 def test_kcore_and_hits_resume(spark, tmp_path):
     """Interrupted runs resume from the last committed checkpoint and end
     identical to uninterrupted ones (peeling and power iteration are

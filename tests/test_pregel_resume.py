@@ -100,6 +100,65 @@ def test_resume_rejects_checkpoints_from_different_input(spark, tiny_edges, tmp_
     assert {r["vid"]: r["component"] for r in c.state.collect()} == expected
 
 
+def test_hits_resume_rejects_checkpoints_from_different_input(spark, tmp_path):
+    """hits resumes through CheckpointStore directly, so it needs the same
+    input-fingerprint check as run_pregel: a checkpoint of graph a must
+    not be resumed as the result for a disjoint graph b."""
+    import warnings
+
+    from linkgraph.algos.hits import hits
+
+    a = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src bigint, dst bigint")
+    b = spark.createDataFrame(
+        [(10, 11), (11, 12), (12, 13), (13, 10), (10, 12)], "src bigint, dst bigint"
+    )
+    ckpt = str(tmp_path / "ck")
+    hits(a, max_iter=3, checkpoint_dir=ckpt, job_id="h")
+    assert CheckpointStore(ckpt, "h").latest() == 3
+
+    expected = {
+        r["vid"]: (r["hub"], r["auth"]) for r in hits(b, max_iter=3).state.collect()
+    }
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = hits(b, max_iter=3, checkpoint_dir=ckpt, job_id="h")
+    assert any("different edge set" in str(x.message) for x in w)
+    assert {r["vid"]: (r["hub"], r["auth"]) for r in got.state.collect()} == expected
+    # same-input resume still works (fingerprint matches, no warning)
+    with warnings.catch_warnings(record=True) as w2:
+        warnings.simplefilter("always")
+        again = hits(b, max_iter=3, checkpoint_dir=ckpt, job_id="h")
+    assert not any("different edge set" in str(x.message) for x in w2)
+    assert {r["vid"]: (r["hub"], r["auth"]) for r in again.state.collect()} == expected
+
+
+def test_kcore_resume_rejects_checkpoints_from_different_input(spark, tmp_path):
+    """k_core resumes its shrinking edge set through CheckpointStore
+    directly; a checkpoint of graph a must not be resumed for graph b."""
+    import warnings
+
+    from linkgraph.algos.kcore import k_core
+
+    a = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], "src bigint, dst bigint")
+    b = spark.createDataFrame(
+        [(10, 11), (11, 12), (12, 13), (13, 10), (10, 12)], "src bigint, dst bigint"
+    )
+    ckpt = str(tmp_path / "ck")
+    k_core(a, k=2, checkpoint_dir=ckpt, job_id="k")
+    assert CheckpointStore(ckpt, "k").latest() is not None
+
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = k_core(b, k=2, checkpoint_dir=ckpt, job_id="k")
+    assert any("different edge set" in str(x.message) for x in w)
+    assert {r["vid"] for r in got.state.collect()} == {10, 11, 12, 13}
+    with warnings.catch_warnings(record=True) as w2:
+        warnings.simplefilter("always")
+        again = k_core(b, k=2, checkpoint_dir=ckpt, job_id="k")
+    assert not any("different edge set" in str(x.message) for x in w2)
+    assert {r["vid"] for r in again.state.collect()} == {10, 11, 12, 13}
+
+
 def test_resume_rejects_unfingerprinted_checkpoints(spark, tiny_edges, tmp_path):
     """Checkpoints with NO stored fingerprint (written before
     fingerprinting existed, or left by a crash between clear() and
